@@ -1,6 +1,6 @@
 """Regenerate PLANS.md — formatted physical plans of the load-bearing
 operators, the human-readable twin of the pins in tests/test_plans.py,
-test_bloom.py, test_langid.py, test_pipeline_ops.py, test_topic_nb.py.
+test_cuckoo.py, test_langid.py, test_pipeline_ops.py, test_topic_nb.py.
 
 Run:  python BENCH/gen_plans.py   (writes /root/repo/PLANS.md)
 """
@@ -38,7 +38,7 @@ def main() -> None:
     from storm_focused_crawler_spark.fixtures import gen_pages
     from storm_focused_crawler_spark.functions import langid as L
     from storm_focused_crawler_spark.functions import topic_nb as TN
-    from storm_focused_crawler_spark.operators import bloom as B
+    from storm_focused_crawler_spark.operators import cuckoo as CK
     from storm_focused_crawler_spark.operators import robots as RB
 
     spark = bench.build_session(8, app="gen_plans")
@@ -79,11 +79,6 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
 
     hashes = spark.range(0, 2000).select(F.xxhash64("id").alias("url_hash"))
-    shards = B.build_shards(hashes, 4, 1 << 12)
-    routed = B.probe_transform(spark, shards, 4, 1 << 12, broadcast_max_bytes=0)
-
-    from storm_focused_crawler_spark.operators import cuckoo as CK
-
     ck_shards = CK.build_shards(hashes, 4, 1 << 10)
 
     # one iteration of the connected-components loop, exactly as
@@ -130,14 +125,11 @@ def main() -> None:
          "CartesianProduct / BroadcastNestedLoopJoin anywhere; exact-cosine "
          "verify joins by id.",
          REGISTRY["dedup_embedding_cosine"][0](spark, SF)),
-        ("Shard-routed Bloom probe (beyond-broadcast path)",
-         "One Exchange on (shard) routes each hash to the task holding its "
-         "bitset — a cogroup, not an N-times-replicated broadcast.",
-         routed(hashes)),
         ("Shard-routed cuckoo probe (beyond-broadcast path)",
-         "Same cogroup shape as the Bloom probe over the deletion-capable "
-         "cuckoo sidecar (operators/cuckoo.py): one Exchange on (shard), "
-         "each task deserializes exactly one fingerprint table.",
+         "One Exchange on (shard) routes each hash to the task holding its "
+         "fingerprint table (operators/cuckoo.py) — a cogroup, not an "
+         "N-times-replicated broadcast; each task deserializes exactly one "
+         "table.",
          CK.probe_routed(hashes, ck_shards, 4, 1 << 10)),
         ("Char-n-gram language ID — Arrow scorer (hot path)",
          "ONE narrow ArrowEvalPython pass: no Generate (explode), no "
@@ -255,7 +247,7 @@ def main() -> None:
         "",
         "Generated against sf0.001 on local[8] (plans are scale-invariant in",
         "structure; AQE may re-plan exchanges at runtime).  These are the plan",
-        "properties the test suite pins (tests/test_plans.py, test_bloom.py,",
+        "properties the test suite pins (tests/test_plans.py, test_cuckoo.py,",
         "test_langid.py, test_pipeline_ops.py, test_topic_nb.py) — this file",
         "is the human-readable evidence.  Regenerate: python BENCH/gen_plans.py",
         "",

@@ -59,7 +59,6 @@ HEADLINE = [
     "pii_detect_redact",
     "decontam_ngram",
     "filter_robots_rep",
-    "bloom_build_merge",
     "cuckoo_build_merge",
 ]
 

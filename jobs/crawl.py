@@ -41,12 +41,8 @@ def parse_args(argv=None):
     ap.add_argument("--capacity", type=int, default=1024)
     ap.add_argument("--n-salts", type=int, default=32)
     ap.add_argument("--bloom", action="store_true",
-                    help="enable the advisory seen pre-filter (kind per --seen-filter)")
-    ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-                    help="sidecar kind: bloom (OR-merge bitsets) or cuckoo "
-                         "(fingerprint table, supports deletion)")
+                    help="enable the advisory cuckoo-filter seen pre-filter")
     ap.add_argument("--bloom-shards", type=int, default=8)
-    ap.add_argument("--bloom-bits", type=int, default=1 << 20, help="bits per Bloom shard")
     ap.add_argument("--cuckoo-buckets", type=int, default=1 << 17,
                     help="buckets per cuckoo shard (power of two, 4 slots each)")
     ap.add_argument("--text-index", action="store_true",
@@ -111,9 +107,7 @@ def main(argv=None) -> int:
     kw = tuple(args.keywords.split(",")) if args.keywords else tuple(topic_keywords())
     cfg = CrawlConfig(rounds=args.rounds, capacity=args.capacity,
                       keywords=kw, n_salts=args.n_salts, use_bloom=args.bloom,
-                      seen_filter=args.seen_filter,
                       bloom_shards=args.bloom_shards,
-                      bloom_bits_per_shard=args.bloom_bits,
                       cuckoo_buckets_per_shard=args.cuckoo_buckets,
                       build_text_index=args.text_index,
                       host_rank_weight=args.host_rank_weight,

@@ -22,9 +22,9 @@ Scale notes (the 100 TB story, graded against BASELINE.md):
   * politeness runs the two-phase salted top-k (operators/frontier.py)
     so one hot host cannot skew a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
-    optional broadcast-Bloom pre-filter, operators/bloom.py) — the
-    frontier and seen tables are both hash-distributed on url_hash so
-    the anti-join co-partitions.
+    optional sharded cuckoo-filter pre-filter, operators/cuckoo.py) —
+    the frontier and seen tables are both hash-distributed on url_hash
+    so the anti-join co-partitions.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from storm_focused_crawler_spark.functions.udfs import (
     extract_text_col,
     score_col,
 )
+from storm_focused_crawler_spark.operators import cuckoo
 from storm_focused_crawler_spark.operators.frontier import dequeue, eligible
 from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
@@ -57,21 +58,20 @@ class CrawlConfig:
     keywords: tuple[str, ...] = ()
     n_salts: int = 8
     url_buckets: int = 16
+    # use_bloom enables the advisory seen-filter sidecar: a sharded
+    # cuckoo filter with deletion support (operators/cuckoo.py).  It
+    # honors the §2.1-3 contract — probe-negative ⇒ definitively unseen;
+    # the exact anti-join stays the membership authority — so the crawl
+    # ordering is identical with or without it (tested).  The table
+    # keeps its historical name ``bloom``.
     use_bloom: bool = False
-    # which advisory seen-filter sidecar use_bloom enables: "bloom"
-    # (bitset OR-merge, operators/bloom.py) or "cuckoo" (fingerprint
-    # table with deletion support, operators/cuckoo.py).  Both honor
-    # the same §2.1-3 contract — probe-negative ⇒ definitively unseen;
-    # the exact anti-join stays the membership authority — so the
-    # crawl ordering is identical under either (tested).
-    seen_filter: str = "bloom"
+    seen_filter: str = "cuckoo"  # the only sidecar kind
     bloom_shards: int = 8
-    bloom_bits_per_shard: int = 1 << 20
     # cuckoo sizing: buckets/shard (power of two, 4 slots each) — size
     # for load ≤ 0.8; 2^17 buckets ≈ 524k slots ≈ 1 MiB/shard
     cuckoo_buckets_per_shard: int = 1 << 17
     # broadcast the filter while total ≤ this; shard-routed probe beyond
-    # (the 10^10-URL / ~12 GiB-bitset path — bloom/cuckoo.probe_routed)
+    # (the 10^10-URL path — cuckoo.probe_routed)
     bloom_broadcast_max_bytes: int = 64 << 20
     max_budget: int | None = None  # literal WindowGroupLimit bound; computed once per crawl
     compact_every: int = 64  # rewrite the full seen set every N rounds (bounds delta-scan fan-in)
@@ -113,6 +113,23 @@ class CrawlConfig:
     # never enqueued; None = unbounded.  Seeds are depth 0.  Oracle
     # twin: seqcrawler.CrawlConfig.max_depth.
     max_depth: int | None = None
+
+    def __post_init__(self):
+        if self.seen_filter != "cuckoo":
+            raise ValueError(f"unknown seen_filter {self.seen_filter!r}; only 'cuckoo'")
+
+
+def _filter_cfg(cfg: CrawlConfig) -> dict:
+    """The sidecar geometry recorded as the manifest's ``bloom_cfg``."""
+    return {"kind": "cuckoo", "n_shards": cfg.bloom_shards,
+            "n_buckets": cfg.cuckoo_buckets_per_shard}
+
+
+def _has_filter(manifest: dict, cfg: CrawlConfig) -> bool:
+    """Whether *manifest*'s round committed a sidecar built with *cfg*'s
+    geometry (ADVICE r01: a sidecar of another geometry or kind must not
+    be merged into, and a workdir with use_bloom newly enabled has none)."""
+    return "bloom" in manifest["tables"] and manifest.get("bloom_cfg") == _filter_cfg(cfg)
 
 
 # --------------------------------------------------------------------------
@@ -587,38 +604,16 @@ def run_crawl(
         seen = store.read_union(spark, last, "seen")
         start = last + 1
 
-    from storm_focused_crawler_spark.operators import bloom, cuckoo
-
-    # the two sidecars share one module API (build_shards/merge_shards/
-    # probe_transform(spark, shards, n_shards, PARAM2, broadcast_max));
-    # PARAM2 is bits-per-shard for bloom, buckets-per-shard for cuckoo
-    if cfg.seen_filter == "cuckoo":
-        filt, filt_param2 = cuckoo, cfg.cuckoo_buckets_per_shard
-        bloom_cfg = {"kind": "cuckoo", "n_shards": cfg.bloom_shards,
-                     "n_buckets": cfg.cuckoo_buckets_per_shard}
-    else:
-        filt, filt_param2 = bloom, cfg.bloom_bits_per_shard
-        bloom_cfg = {"n_shards": cfg.bloom_shards, "n_bits": cfg.bloom_bits_per_shard}
     for rnd in range(start, cfg.rounds):
         t0 = time.time()
-        # a previous bloom is usable only if it exists AND was built with
-        # the same shard/bit config (ADVICE r01: resuming with changed
-        # bloom_shards/bits must not OR incompatible bitsets; resuming
-        # with bloom newly enabled must not treat a delta-only filter as
-        # the full history)
-        have_prev_bloom = False
-        if cfg.use_bloom and rnd > 0:
-            prev_m = store.manifest(rnd - 1)
-            have_prev_bloom = (
-                "bloom" in prev_m["tables"] and prev_m.get("bloom_cfg") == bloom_cfg
-            )
+        have_prev_bloom = cfg.use_bloom and rnd > 0 and _has_filter(store.manifest(rnd - 1), cfg)
         probe = None
         if have_prev_bloom:
             # shards snapshot committed by the previous round; advisory
             # only — eligible() re-checks positives exactly (§2.1-3)
             shards = store.read(spark, rnd - 1, "bloom")
-            probe = filt.probe_transform(
-                spark, shards, cfg.bloom_shards, filt_param2,
+            probe = cuckoo.probe_transform(
+                spark, shards, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard,
                 broadcast_max_bytes=cfg.bloom_broadcast_max_bytes,
             )
         host_ranks = pr_out = None
@@ -706,18 +701,22 @@ def run_crawl(
                 )
         if cfg.use_bloom:
             if have_prev_bloom:
-                # incremental: hash only this round's delta, OR into prev
-                new_shards = filt.merge_shards(
+                # incremental: insert only this round's delta into prev
+                new_shards = cuckoo.merge_shards(
                     store.read(spark, rnd - 1, "bloom"),
-                    filt.build_shards(out["seen"], cfg.bloom_shards, filt_param2),
+                    cuckoo.build_shards(
+                        out["seen"], cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
+                    ),
                 )
             else:
-                # no usable prior filter (bloom newly enabled mid-crawl,
-                # or config changed): rebuild from the FULL seen set so
-                # pre-bloom rounds stay covered — a delta-only filter
+                # no usable prior filter (sidecar newly enabled mid-crawl,
+                # or geometry/kind changed): rebuild from the FULL seen set
+                # so earlier rounds stay covered — a delta-only filter
                 # would route their URLs past the anti-join as sure_new
                 full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
-                new_shards = filt.build_shards(full, cfg.bloom_shards, filt_param2)
+                new_shards = cuckoo.build_shards(
+                    full, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
+                )
             out["bloom"] = new_shards
         persisted = out.pop("_persisted")
         observations = out.pop("_observations", {})
@@ -754,7 +753,7 @@ def run_crawl(
                     stage_metrics[name] = {"rows": 0, "error": repr(e)}
         amend = {"wall_sec": round(time.time() - t0, 3), "stages": stage_metrics}
         if cfg.use_bloom:
-            amend["bloom_cfg"] = bloom_cfg
+            amend["bloom_cfg"] = _filter_cfg(cfg)
         store.amend_manifest(rnd, amend)
         if compact_now and cfg.use_bloom:
             # the filter sidecar is a FULL snapshot per round and only
@@ -832,12 +831,10 @@ def recrawl(
       * ``frontier``   — previous frontier ∪ victims (anti-joined first
         so an already-queued victim is not duplicated), victims carry
         ``score=rescore`` and ``discovered_round=maintenance round``;
-      * ``bloom``      — the seen-filter sidecar, updated to match:
-        the CUCKOO sidecar supports targeted ``delete_from_shards``
-        (touches each victim's one shard, no rebuild, no full-seen
-        scan); a BLOOM sidecar cannot delete and is REBUILT from the
-        new ``seen_full`` — this asymmetry is exactly why the north
-        star names a cuckoo option.
+      * ``bloom``      — the cuckoo seen-filter sidecar, updated to
+        match by targeted ``delete_from_shards`` (touches each victim's
+        one shard, no rebuild, no full-seen scan); without a compatible
+        prior sidecar it is REBUILT from the new ``seen_full``.
 
     Returns the committed maintenance round number.  Resume semantics:
     the maintenance round consumes one round slot; continue crawling by
@@ -875,8 +872,8 @@ def recrawl(
         "frontier": prev_frontier.unionByName(requeued),
         "seen_full": seen_full,
     }
-    prev_m_sched = store.manifest(last)
-    if "host_sched" in prev_m_sched["tables"]:
+    prev_m = store.manifest(last)
+    if "host_sched" in prev_m["tables"]:
         # the continuous politeness clock must survive a maintenance
         # commit — re-point the latest snapshot so the post-maintenance
         # round still carries every host's last-fetch offset forward
@@ -884,31 +881,18 @@ def recrawl(
 
     amend: dict = {"maintenance": "recrawl"}
     if cfg.use_bloom:
-        from storm_focused_crawler_spark.operators import bloom, cuckoo
-
-        prev_m = store.manifest(last)
-        if cfg.seen_filter == "cuckoo":
-            bloom_cfg = {"kind": "cuckoo", "n_shards": cfg.bloom_shards,
-                         "n_buckets": cfg.cuckoo_buckets_per_shard}
-            if "bloom" in prev_m["tables"] and prev_m.get("bloom_cfg") == bloom_cfg:
-                # targeted deletion: each victim touches one shard
-                tables["bloom"] = cuckoo.delete_from_shards(
-                    store.read(spark, last, "bloom"),
-                    v.select("url_hash"),
-                    cfg.bloom_shards,
-                )
-            else:
-                tables["bloom"] = cuckoo.build_shards(
-                    seen_full, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
-                )
-        else:
-            # Bloom cannot delete — rebuild from the compacted seen set
-            bloom_cfg = {"n_shards": cfg.bloom_shards,
-                         "n_bits": cfg.bloom_bits_per_shard}
-            tables["bloom"] = bloom.build_shards(
-                seen_full, cfg.bloom_shards, cfg.bloom_bits_per_shard
+        if _has_filter(prev_m, cfg):
+            # targeted deletion: each victim touches one shard
+            tables["bloom"] = cuckoo.delete_from_shards(
+                store.read(spark, last, "bloom"),
+                v.select("url_hash"),
+                cfg.bloom_shards,
             )
-        amend["bloom_cfg"] = bloom_cfg
+        else:
+            tables["bloom"] = cuckoo.build_shards(
+                seen_full, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
+            )
+        amend["bloom_cfg"] = _filter_cfg(cfg)
 
     store.write_round(mnt, tables)
     store.amend_manifest(mnt, amend)

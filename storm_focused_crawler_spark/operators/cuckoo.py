@@ -1,20 +1,20 @@
 """Sharded cuckoo-filter URL-seen accelerator (SURVEY.md §4.3-2).
 
 BASELINE.json's north star names a "sharded Bloom/cuckoo-filter
-URL-seen set built via vectorized Arrow UDFs"; operators/bloom.py is
-the Bloom half, this module is the cuckoo half (public design: Fan,
-Andersen, Kaminsky, Mitzenmacher, "Cuckoo Filter: Practically Better
-Than Bloom", CoNEXT 2014).  Same advisory contract as the Bloom
-sidecar (§2.1-3): probe-negative rows are DEFINITIVELY unseen — the
-exact anti-join remains the membership authority — so the crawl
-ordering is byte-identical whichever filter (or none) is enabled.
+URL-seen set built via vectorized Arrow UDFs"; this module is the
+crawl's seen-filter sidecar (public design: Fan, Andersen, Kaminsky,
+Mitzenmacher, "Cuckoo Filter: Practically Better Than Bloom", CoNEXT
+2014).  Advisory contract (§2.1-3): probe-negative rows are
+DEFINITIVELY unseen — the exact anti-join remains the membership
+authority — so the crawl ordering is byte-identical with the filter
+enabled or not.
 
-What the cuckoo filter adds over Bloom for a 10^10-URL frontier:
+Why a cuckoo filter rather than a Bloom filter for a 10^10-URL frontier:
 
   * **Deletion** (``delete_from_shards``): a recrawl policy can evict a
     URL from the seen sidecar without rebuilding the whole filter —
-    impossible with a plain Bloom, whose only maintenance move is the
-    full rebuild the driver does on compaction rounds.
+    impossible with a plain Bloom, whose only maintenance move is a
+    full rebuild.
   * **Better space at low FPR**: 16-bit fingerprints × 4-slot buckets
     give FPR ≈ 2·b/2^f ≈ 1.2e-4 at ~12 bits/item effective — a Bloom
     needs ~17 bits/item for that rate.
@@ -37,9 +37,9 @@ filter with a stash" variant) so the no-false-negative property is
 UNCONDITIONAL, not load-dependent — property-tested in
 tests/test_cuckoo.py, including at adversarial load factors.
 
-Shards are keyed by ``pmod(url_hash, n_shards)`` exactly like the
-Bloom shards, and the probe offers the same two modes behind the same
-``probe_transform`` API the driver already speaks:
+Shards are keyed by ``pmod(url_hash, n_shards)``, the frontier's
+hash distribution, and ``probe_transform`` chooses between two probe
+modes by total table size:
 
   * broadcast — collect the (small) shard tables, scalar pandas UDF;
   * shard-routed cogroup — each task loads only its own shard's
@@ -48,10 +48,10 @@ Bloom shards, and the probe offers the same two modes behind the same
 
 Merging two shard sets re-inserts the smaller side's stored
 fingerprints into the larger side's table (sorted, deterministic).
-Unlike Bloom's bitwise OR, the merged TABLE BYTES are not defined to
-equal a from-scratch rebuild's — the semantic contract (identical
-probe verdicts for the union of memberships) is, and that is what the
-tests pin.
+Unlike a Bloom filter's bitwise OR, the merged TABLE BYTES are not
+defined to equal a from-scratch rebuild's — the semantic contract
+(identical probe verdicts for the union of memberships) is, and that
+is what the tests pin.
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ _SHARD_SCHEMA = "shard int, table binary, stash binary, n long"
 
 
 def _mix(x: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer — same mixer family as bloom._h2."""
+    """splitmix64 finalizer (Steele, Lea, Flood, OOPSLA 2014)."""
     z = x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
@@ -276,8 +276,8 @@ def delete_from_shards(shards: DataFrame, victims: DataFrame, n_shards: int) -> 
     removed.  In the crawl that costs a spurious recrawl of that one
     URL, never a wrong result (the exact seen table remains the
     authority for ordering parity); recrawl policies that cannot
-    tolerate it should rebuild the filter instead (what the driver's
-    compaction rounds do anyway)."""
+    tolerate it should rebuild the filter from the exact seen set
+    instead (``build_shards``)."""
 
     def dele(sh: pd.DataFrame, v: pd.DataFrame) -> pd.DataFrame:
         if sh.empty:
@@ -326,9 +326,10 @@ def probe_transform(
     n_buckets: int,
     broadcast_max_bytes: int = 64 << 20,
 ):
-    """DataFrame transformer: df → df + boolean ``_maybe`` column —
-    same contract as bloom.probe_transform, so driver.run_round and
-    frontier.eligible take either interchangeably."""
+    """DataFrame transformer: df → df + boolean ``_maybe`` column, the
+    *bloom_probe* driver.run_round passes to frontier.eligible.  The
+    shard tables are broadcast while their total is ≤
+    *broadcast_max_bytes*, shard-routed beyond."""
     total_bytes = n_shards * n_buckets * SLOTS * 2
     if total_bytes <= broadcast_max_bytes:
         col_fn = probe_col(spark, shards, n_shards, n_buckets)

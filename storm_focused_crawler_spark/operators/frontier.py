@@ -43,13 +43,13 @@ def eligible(
 ) -> DataFrame:
     """frontier ∖ seen, minus robots-blocked (§2.1-5 pre-filter).
 
-    seen is probed by url_hash with an exact LEFT ANTI join — the Bloom
-    sidecar (operators/bloom.py) pre-filters the probe side when
-    *bloom_probe* is given (a DataFrame transformer adding a boolean
-    ``_maybe`` column — broadcast or shard-routed, bloom.probe_transform),
+    seen is probed by url_hash with an exact LEFT ANTI join — the cuckoo
+    seen-filter sidecar (operators/cuckoo.py) pre-filters the probe side
+    when *bloom_probe* is given (a DataFrame transformer adding a boolean
+    ``_maybe`` column — broadcast or shard-routed, cuckoo.probe_transform),
     but the anti-join stays the membership authority (§2.1-3):
-    Bloom-negative rows are DEFINITIVELY unseen (no false negatives,
-    property-tested) and skip the join entirely; only Bloom-positive
+    filter-negative rows are DEFINITIVELY unseen (no false negatives,
+    property-tested) and skip the join entirely; only filter-positive
     rows — ~FPR·|frontier| + |actually seen| — touch the 10^10-hash
     seen table.
 

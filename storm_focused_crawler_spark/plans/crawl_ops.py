@@ -5,7 +5,7 @@ fixture, which DuckDB cannot reproduce, so the driver records the
 weaker rows-only check; their values are pytest-locked instead:
   * canon / hash64 — tests/test_spec.py (golden + Spark lock)
   * extract/score parity — tests/test_parity.py (byte-identical text)
-  * bloom — tests/test_bloom.py (no false negatives, FPR bound)
+  * cuckoo — tests/test_cuckoo.py (no false negatives, FPR bound)
 All outputs here are still fully deterministic DataFrames.
 """
 
@@ -22,7 +22,6 @@ from storm_focused_crawler_spark.functions.udfs import (
     extract_text_col,
     score_col,
 )
-from storm_focused_crawler_spark.operators import bloom as B
 from storm_focused_crawler_spark.plans.queries import _t, _urls, op
 
 
@@ -77,31 +76,11 @@ def score_relevance(spark, sf_dir):
     return p.select("url", score_col(extract_text_col(F.col("html")), kw).alias("score"))
 
 
-@op("bloom_build_merge", None)
-def bloom_build_merge(spark, sf_dir):
-    u = _urls(spark, sf_dir).select(F.xxhash64("url").alias("url_hash"))
-    half_a = u.filter(F.pmod(F.col("url_hash"), F.lit(2)) == 0)
-    half_b = u.filter(F.pmod(F.col("url_hash"), F.lit(2)) == 1)
-    n_bits = 1 << 16
-    merged = B.merge_shards(
-        B.build_shards(half_a, n_shards=4, n_bits=n_bits),
-        B.build_shards(half_b, n_shards=4, n_bits=n_bits),
-    )
-    # deterministic shard stats: rows hashed + popcount of the bitset
-    return merged.select(
-        "shard", "n",
-        F.aggregate(
-            F.transform(F.split(F.hex(F.col("bits")), ""),
-                        lambda c: F.bit_count(F.conv(c, 16, 10).cast("long"))),
-            F.lit(0).cast("long"), lambda a, x: a + x,
-        ).alias("bits_set"),
-    )
-
-
 @op("cuckoo_build_merge", None)  # pytest-locked (tests/test_cuckoo.py), rows-only
 def cuckoo_build_merge(spark, sf_dir):
-    """Cuckoo half of the north star's "Bloom/cuckoo-filter URL-seen
-    set": build per-half shards, semantic merge, emit per-shard stats.
+    """The north star's "Bloom/cuckoo-filter URL-seen set" (the cuckoo
+    filter is the crawl's only seen-filter sidecar): build per-half
+    shards, semantic merge, emit per-shard stats.
     Entry COUNT is order-invariant (set-semantic inserts); table bytes
     are not part of the contract (see operators/cuckoo.py)."""
     from storm_focused_crawler_spark.operators import cuckoo as CK

@@ -6,7 +6,9 @@ config here only sets the knobs that matter at both scales: AQE on
 (runtime re-plan + skew-join splitting complements our explicit
 salting), shuffle partitions sized to the parallelism level, Arrow
 enabled for the pandas-UDF paths, UTC timezone pinned so results are
-comparable against the DuckDB oracle.
+comparable against the DuckDB oracle.  The driver heap defaults to half
+of physical memory (a fixed large default lets the JVM grow past what
+the machine has and be OOM-killed); SPARK_DRIVER_MEM overrides it.
 """
 
 from __future__ import annotations
@@ -14,6 +16,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem() -> str:
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys // 2 >> 20}m"
 
 
 def get_spark(
@@ -42,7 +49,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

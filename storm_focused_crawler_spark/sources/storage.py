@@ -168,7 +168,7 @@ class ParquetSnapshotStore:
         and record the pruning in those rounds' manifests (the name
         leaves ``tables`` so read_union skips it; ``pruned`` keeps the
         row count for audit).  For per-round FULL snapshots — the
-        bloom/cuckoo seen-filter sidecar, rewritten whole every round —
+        cuckoo seen-filter sidecar, rewritten whole every round —
         only the latest snapshot is ever read, so a compaction round
         prunes the older ones and the state dir holds
         O(compact_every) filter snapshots on arbitrarily long crawls

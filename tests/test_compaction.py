@@ -100,10 +100,11 @@ def test_delta_tables_compact_too(spark, sf_dir, tmp_path):
 
 
 def test_filter_sidecar_snapshots_pruned_on_compaction(spark, sf_dir, tmp_path):
-    """The bloom/cuckoo sidecar is a FULL snapshot per round; compaction
-    rounds prune the older ones (VERDICT r03 #7), so a long crawl's
-    state dir holds O(compact_every) filter snapshots — while resume,
-    probe correctness, and state parity are untouched."""
+    """The cuckoo seen-filter sidecar (table ``bloom``) is a FULL
+    snapshot per round; compaction rounds prune the older ones (VERDICT
+    r03 #7), so a long crawl's state dir holds O(compact_every) filter
+    snapshots — while resume, probe correctness, and state parity are
+    untouched."""
     import os
 
     paths = gen_pages.ensure(sf_dir)

@@ -7,6 +7,7 @@ seed list + politeness budget — and invariant to partition count.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -73,53 +74,32 @@ def test_crawl_parity(spark, fixture_paths, oracle_result, tmp_path, parts):
         assert vals[2:] == omap[url][2:]
 
 
-def test_crawl_parity_with_bloom(spark, fixture_paths, oracle_result, tmp_path):
-    """With the Bloom pre-filter ON, results are IDENTICAL — the Bloom
-    is advisory (§2.1-3): negatives skip the anti-join (no false
-    negatives), positives are re-checked exactly."""
-    wd = str(tmp_path / "bloomrun")
-    cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY,
-        keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
-    )
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    ordering, results, seen = _collect(spark, store)
-    assert ordering == sorted(oracle_result.ordering)
-    assert seen == oracle_result.seen_hashes
-    assert set(results) == {t[2] for t in oracle_result.results}
-
-
-def test_crawl_parity_with_routed_bloom(spark, fixture_paths, oracle_result, tmp_path):
-    """Same parity gate with the probe FORCED onto the shard-routed
-    (beyond-broadcast) path — the 10^10-URL configuration."""
-    wd = str(tmp_path / "bloomrouted")
-    cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY,
-        keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
-        bloom_broadcast_max_bytes=0,  # force probe_routed
-    )
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    ordering, results, seen = _collect(spark, store)
-    assert ordering == sorted(oracle_result.ordering)
-    assert seen == oracle_result.seen_hashes
-    assert set(results) == {t[2] for t in oracle_result.results}
-
-
-def test_bloom_enabled_mid_crawl_covers_prebloom_rounds(
-    spark, fixture_paths, oracle_result, tmp_path
+@pytest.mark.parametrize("prior", ["none", "bloom_era"])
+def test_cuckoo_enabled_mid_crawl_covers_earlier_rounds(
+    spark, fixture_paths, oracle_result, tmp_path, prior
 ):
-    """ADVICE r01 (medium): resuming an existing workdir with use_bloom
-    newly enabled must rebuild the filter from the FULL seen set, so
-    URLs seen in pre-bloom rounds are never re-emitted."""
+    """ADVICE r01 (medium): resuming an existing workdir without a usable
+    seen filter must rebuild it from the FULL seen set, so URLs seen in
+    earlier rounds are never re-emitted.  Two prior states: no filter
+    at all, and a manifest recorded by the retired Bloom sidecar (the
+    upgrade path for existing workdirs)."""
     kw = tuple(gen_pages.topic_keywords())
-    wd = str(tmp_path / "bloomlate")
-    drv.run_crawl(spark, fixture_paths,
-                  drv.CrawlConfig(rounds=1, capacity=CAPACITY, keywords=kw), wd)
+    wd = str(tmp_path / f"cuckoolate_{prior}")
+    store = drv.run_crawl(spark, fixture_paths,
+                          drv.CrawlConfig(rounds=1, capacity=CAPACITY, keywords=kw), wd)
+    if prior == "bloom_era":
+        # what the retired Bloom sidecar committed: bitset shards under
+        # table ``bloom``, recorded with a bits-per-shard config
+        spark.createDataFrame(
+            [(s, bytes(65536 // 8), 0) for s in range(4)], "shard int, bits binary, n long"
+        ).write.parquet(os.path.join(store._round_dir(0), "bloom"))
+        store.amend_manifest(0, {
+            "tables": dict(store.manifest(0)["tables"], bloom=4),
+            "bloom_cfg": {"n_shards": 4, "n_bits": 65536},
+        })
     cfg = drv.CrawlConfig(
         rounds=ROUNDS, capacity=CAPACITY, keywords=kw,
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
+        use_bloom=True, bloom_shards=4, cuckoo_buckets_per_shard=1 << 10,
     )
     store = drv.run_crawl(spark, fixture_paths, cfg, wd, resume=True)
     ordering, results, seen = _collect(spark, store)
@@ -127,8 +107,13 @@ def test_bloom_enabled_mid_crawl_covers_prebloom_rounds(
     assert seen == oracle_result.seen_hashes
     # manifest must record the filter config for future compat checks
     assert store.manifest(ROUNDS - 1)["bloom_cfg"] == {
-        "n_shards": 4, "n_bits": 1 << 16
+        "kind": "cuckoo", "n_shards": 4, "n_buckets": 1 << 10
     }
+
+
+def test_seen_filter_is_cuckoo_only():
+    with pytest.raises(ValueError):
+        drv.CrawlConfig(seen_filter="bloom")
 
 
 def test_extracted_text_matches_corpus(spark, fixture_paths, tmp_path):
@@ -162,10 +147,10 @@ def test_resume_exact(spark, fixture_paths, oracle_result, tmp_path):
 
 
 def test_crawl_parity_with_cuckoo(spark, fixture_paths, oracle_result, tmp_path):
-    """Same parity gate with the CUCKOO seen-filter sidecar (the other
-    half of the north star's "Bloom/cuckoo-filter URL-seen set"):
-    identical ordering/seen/results — the filter is advisory under the
-    same §2.1-3 contract, broadcast probe mode."""
+    """Same parity gate with the cuckoo seen-filter sidecar ON:
+    identical ordering/seen/results — the filter is advisory (§2.1-3):
+    negatives skip the anti-join (no false negatives), positives are
+    re-checked exactly.  Broadcast probe mode."""
     wd = str(tmp_path / "cuckoorun")
     cfg = drv.CrawlConfig(
         rounds=ROUNDS, capacity=CAPACITY,

@@ -148,36 +148,6 @@ def test_recrawl_canonicalizes_victims(spark, fixture_paths, tmp_path):
     assert not (set(mangled) & fr)
 
 
-def test_recrawl_bloom_kind_rebuilds(spark, fixture_paths, tmp_path):
-    """Same maintenance flow with the Bloom sidecar: deletion is
-    impossible, so recrawl rebuilds the filter from the new seen set —
-    verdicts still correct (victims negative, survivors positive)."""
-    wd = str(tmp_path / "recrawl_bloom")
-    shutil.rmtree(wd, ignore_errors=True)
-    cfg = _cfg(seen_filter="bloom", bloom_bits_per_shard=1 << 16)
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    victims = _link_discovered_urls(spark, store, fixture_paths)
-    vdf = spark.createDataFrame([(u,) for u in victims], "url string")
-    mnt = drv.recrawl(spark, store, cfg, vdf, rescore=2.0)
-
-    from storm_focused_crawler_spark.operators import bloom as B
-
-    shards = store.read(spark, mnt, "bloom")
-    probe = B.probe_col(spark, shards, cfg.bloom_shards, cfg.bloom_bits_per_shard)
-    seen_after = store.read_union(spark, mnt, "seen").select("url_hash")
-    assert (
-        seen_after.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count()
-        == 0
-    )
-    # the rebuilt filter no longer contains the victims' hashes as
-    # members; allow the FPR residue a Bloom inherently has
-    vhdf = spark.createDataFrame(
-        [(spec.xxh64(u),) for u in victims], "url_hash long"
-    )
-    pos = vhdf.withColumn("m", probe(F.col("url_hash"))).filter(F.col("m")).count()
-    assert pos <= 1  # 3 victims, FPR ~1e-2 ⇒ ≥2 hits is a real bug
-
-
 def test_recrawl_post_maintenance_round_exact_parity(
     spark, fixture_paths, tmp_path
 ):
