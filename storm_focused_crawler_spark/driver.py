@@ -50,6 +50,15 @@ from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 FRONTIER_SCHEMA = "url string, url_hash long, score double, depth int, discovered_round int"
 SEEN_SCHEMA = "url_hash long"
 
+# The two lifecycles of carried crawl state.  DELTA tables are
+# append-only per-round deltas: read with store.read_union, rewritten
+# whole as <table>_full every compact_every rounds.  SNAPSHOT tables are
+# whole per-round snapshots: the next round reads only the latest, a
+# recrawl commit carries it forward, and a compaction round prunes the
+# older ones.
+DELTA_TABLES = ("seen", "host_edges", "postings")
+SNAPSHOT_TABLES = ("bloom", "host_sched", "host_used")
+
 
 @dataclass
 class CrawlConfig:
@@ -73,8 +82,7 @@ class CrawlConfig:
     # broadcast the filter while total ≤ this; shard-routed probe beyond
     # (the 10^10-URL path — cuckoo.probe_routed)
     bloom_broadcast_max_bytes: int = 64 << 20
-    max_budget: int | None = None  # literal WindowGroupLimit bound; computed once per crawl
-    compact_every: int = 64  # rewrite the full seen set every N rounds (bounds delta-scan fan-in)
+    compact_every: int = 64  # rewrite each DELTA_TABLES full set every N rounds (bounds delta-scan fan-in)
     # commit an inverted-index postings delta per round ([R] TextIndexerBolt
     # counterpart; read the full index with store.read_union(..., 'postings'))
     build_text_index: bool = False
@@ -172,7 +180,6 @@ def run_round(
     rnd: int,
     seed_hashes: list[int],
     bloom_probe=None,
-    compact: bool = False,
     url_expansions: DataFrame | None = None,
     host_ranks: DataFrame | None = None,
     host_carry: DataFrame | None = None,
@@ -216,7 +223,7 @@ def run_round(
             )
             .drop("rank_i")
         )
-    deq = dequeue(elig, host_budget, cfg.capacity, cfg.n_salts, cfg.max_budget,
+    deq = dequeue(elig, host_budget, cfg.capacity, cfg.n_salts,
                   round_ms=cfg.round_ms, host_carry=host_carry,
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
     deq = (
@@ -448,10 +455,6 @@ def run_round(
         out_tables["postings"] = TI.postings(
             ex.select("url", "text_x"), "url", "text_x"
         )
-    if compact:
-        # periodic full rewrite of the seen set in THIS round's atomic
-        # commit; read_union then scans [seen_full] + later deltas only
-        out_tables["seen_full"] = seen_next
     return out_tables
 
 
@@ -468,8 +471,6 @@ def run_crawl(
     resume: bool = True,
 ) -> ParquetSnapshotStore:
     import time
-
-    import dataclasses
 
     store = ParquetSnapshotStore(os.path.join(workdir, "state"))
     corpus_path = prepare_corpus(spark, fixture_paths["pages"], workdir, cfg.url_buckets)
@@ -515,12 +516,6 @@ def run_crawl(
         if has_interval
         else None
     )
-    if cfg.max_budget is None:
-        # never mutate the caller's cfg: a reused CrawlConfig against a
-        # different host_budget table would carry a stale literal bound
-        # (dequeue asserts the literal dominates the table's max budget)
-        row = host_budget.agg(F.max("budget")).collect()[0][0]
-        cfg = dataclasses.replace(cfg, max_budget=max(int(row or 0), 2))
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     sitemap_entries: list[tuple[str, float]] = []
@@ -606,14 +601,15 @@ def run_crawl(
 
     for rnd in range(start, cfg.rounds):
         t0 = time.time()
-        have_prev_bloom = cfg.use_bloom and rnd > 0 and _has_filter(store.manifest(rnd - 1), cfg)
+        pm = store.manifest(rnd - 1) if rnd > 0 else {"tables": {}}
+        prev = {t: store.read(spark, rnd - 1, t) for t in SNAPSHOT_TABLES if t in pm["tables"]}
+        if not (cfg.use_bloom and _has_filter(pm, cfg)):
+            prev.pop("bloom", None)
         probe = None
-        if have_prev_bloom:
-            # shards snapshot committed by the previous round; advisory
-            # only — eligible() re-checks positives exactly (§2.1-3)
-            shards = store.read(spark, rnd - 1, "bloom")
+        if "bloom" in prev:
+            # advisory only — eligible() re-checks positives exactly (§2.1-3)
             probe = cuckoo.probe_transform(
-                spark, shards, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard,
+                spark, prev["bloom"], cfg.bloom_shards, cfg.cuckoo_buckets_per_shard,
                 broadcast_max_bytes=cfg.bloom_broadcast_max_bytes,
             )
         host_ranks = pr_out = None
@@ -632,64 +628,44 @@ def run_crawl(
         # last fetch) becomes this round's carry — the politeness debt
         # a delayed host starts the round with.  Both tables are
         # dim-sized; the whole computation broadcasts.
-        prev_sched = host_carry = None
-        if has_interval and rnd > 0:
-            pm = store.manifest(rnd - 1)
-            if "host_sched" in pm["tables"]:
-                prev_sched = store.read(spark, rnd - 1, "host_sched")
-                host_carry = (
-                    prev_sched.join(F.broadcast(delayed_hosts), "host", "inner")
-                    .select(
-                        "host",
-                        F.greatest(
-                            F.lit(0).cast("long"),
-                            F.col("last_abs_ms")
-                            + F.col("min_interval_ms")
-                            - F.lit(rnd * cfg.round_ms).cast("long"),
-                        ).alias("carry_ms"),
-                    )
-                    .filter(F.col("carry_ms") > 0)
+        host_carry = None
+        if "host_sched" in prev and has_interval:
+            host_carry = (
+                prev["host_sched"].join(F.broadcast(delayed_hosts), "host", "inner")
+                .select(
+                    "host",
+                    F.greatest(
+                        F.lit(0).cast("long"),
+                        F.col("last_abs_ms")
+                        + F.col("min_interval_ms")
+                        - F.lit(rnd * cfg.round_ms).cast("long"),
+                    ).alias("carry_ms"),
                 )
-        prev_used = host_used = None
-        if cfg.max_pages_per_host is not None and rnd > 0:
-            pm = store.manifest(rnd - 1)
-            if "host_used" in pm["tables"]:
-                prev_used = host_used = store.read(spark, rnd - 1, "host_used")
-        compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
+                .filter(F.col("carry_ms") > 0)
+            )
         out = run_round(
             spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
             bloom_probe=probe,
-            compact=compact_now,
             url_expansions=url_expansions,
             host_ranks=host_ranks,
             host_carry=host_carry,
-            host_used=host_used,
+            host_used=prev.get("host_used"),
             redirects=redirects,
         )
-        if "host_used" in out and prev_used is not None:
-            # full snapshot = prior spend ∪ this round's delta, summed
-            out["host_used"] = (
-                prev_used.unionByName(out["host_used"])
-                .groupBy("host")
-                .agg(F.sum("used").alias("used"))
-            )
-        if "host_sched" in out and prev_sched is not None:
-            # full snapshot = prior clock ∪ this round's delta, latest
-            # fetch per host — only the newest snapshot is ever read
-            out["host_sched"] = (
-                prev_sched.unionByName(out["host_sched"])
-                .groupBy("host")
-                .agg(F.max("last_abs_ms").alias("last_abs_ms"))
-            )
+        # full snapshot = prior snapshot ∪ this round's per-host delta:
+        # latest fetch clock, summed quota spend
+        for tbl, col, agg in (("host_sched", "last_abs_ms", F.max), ("host_used", "used", F.sum)):
+            if tbl in out and tbl in prev:
+                out[tbl] = (
+                    prev[tbl].unionByName(out[tbl]).groupBy("host").agg(agg(col).alias(col))
+                )
+        compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
         if compact_now:
-            # compaction applies to EVERY append-only delta table, not
-            # just `seen`: a 1000-round crawl otherwise pays an
-            # unbounded multi-path fan-in on read_union('host_edges' /
-            # 'postings') each round.  <table>_full in this round's
-            # atomic commit + the manifest pointer = the same O(1)
-            # resolution the seen set gets.  The _full set must include
-            # THIS round's delta (read_union starts deltas at base+1).
-            for tbl in ("host_edges", "postings"):
+            # <table>_full in this round's atomic commit + the manifest
+            # pointer bound read_union's fan-in on a 1000-round crawl.
+            # The _full set must include THIS round's delta (read_union
+            # starts deltas at base+1).
+            for tbl in DELTA_TABLES:
                 if tbl not in out:
                     continue
                 try:
@@ -700,10 +676,10 @@ def run_crawl(
                     out[tbl] if prior is None else prior.unionByName(out[tbl])
                 )
         if cfg.use_bloom:
-            if have_prev_bloom:
+            if "bloom" in prev:
                 # incremental: insert only this round's delta into prev
                 new_shards = cuckoo.merge_shards(
-                    store.read(spark, rnd - 1, "bloom"),
+                    prev["bloom"],
                     cuckoo.build_shards(
                         out["seen"], cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
                     ),
@@ -755,20 +731,12 @@ def run_crawl(
         if cfg.use_bloom:
             amend["bloom_cfg"] = _filter_cfg(cfg)
         store.amend_manifest(rnd, amend)
-        if compact_now and cfg.use_bloom:
-            # the filter sidecar is a FULL snapshot per round and only
-            # the latest is ever read — fold older snapshots into the
-            # compaction-round cleanup so the state dir holds
-            # O(compact_every) of them on a 1000-round crawl
-            store.prune_table("bloom", rnd)
-        if compact_now and has_interval:
-            # host_sched is likewise a full snapshot; keep only the latest
-            store.prune_table("host_sched", rnd)
-        if compact_now and cfg.max_pages_per_host is not None:
-            # host_used accumulates whenever the quota knob is on —
-            # gating its pruning on has_interval left the per-round
-            # full snapshots unpruned for delay-free crawls (ADVICE r05)
-            store.prune_table("host_used", rnd)
+        if compact_now:
+            # only the latest snapshot is ever read, so the state dir
+            # holds O(compact_every) of each on a 1000-round crawl
+            for tbl in SNAPSHOT_TABLES:
+                if tbl in out:
+                    store.prune_table(tbl, rnd)
         # cut lineage: next round reads the committed snapshot
         frontier = store.read(spark, rnd, "frontier")
         seen = store.read_union(spark, rnd, "seen")
@@ -834,7 +802,11 @@ def recrawl(
       * ``bloom``      — the cuckoo seen-filter sidecar, updated to
         match by targeted ``delete_from_shards`` (touches each victim's
         one shard, no rebuild, no full-seen scan); without a compatible
-        prior sidecar it is REBUILT from the new ``seen_full``.
+        prior sidecar it is REBUILT from the new ``seen_full``;
+      * every other :data:`SNAPSHOT_TABLES` entry the previous round
+        committed (the ``host_sched`` politeness clock, the
+        ``host_used`` per-host quota spend) — carried forward unchanged,
+        so a maintenance commit resets no host's clock or quota.
 
     Returns the committed maintenance round number.  Resume semantics:
     the maintenance round consumes one round slot; continue crawling by
@@ -873,12 +845,6 @@ def recrawl(
         "seen_full": seen_full,
     }
     prev_m = store.manifest(last)
-    if "host_sched" in prev_m["tables"]:
-        # the continuous politeness clock must survive a maintenance
-        # commit — re-point the latest snapshot so the post-maintenance
-        # round still carries every host's last-fetch offset forward
-        tables["host_sched"] = store.read(spark, last, "host_sched")
-
     amend: dict = {"maintenance": "recrawl"}
     if cfg.use_bloom:
         if _has_filter(prev_m, cfg):
@@ -893,6 +859,9 @@ def recrawl(
                 seen_full, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
             )
         amend["bloom_cfg"] = _filter_cfg(cfg)
+    for t in SNAPSHOT_TABLES:
+        if t in prev_m["tables"] and t not in tables:
+            tables[t] = store.read(spark, last, t)
 
     store.write_round(mnt, tables)
     store.amend_manifest(mnt, amend)

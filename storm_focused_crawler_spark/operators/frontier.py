@@ -123,7 +123,7 @@ def dequeue(
     """
     if max_budget is None:
         # one scalar off a broadcast-sized dim table, computed at plan
-        # build; callers on a hot path pass it explicitly (CrawlConfig)
+        # build
         row = host_budget.agg(F.max("budget")).collect()[0][0]
         max_budget = max(int(row or 0), DEFAULT_BUDGET)
     else:

@@ -15,11 +15,11 @@ A round either has a manifest (fully committed, every table listed
 with its row count) or it doesn't (all its files are garbage to be
 ignored/overwritten).  ``latest_round()`` scans manifests only, so a
 killed run resumes from the last committed round with identical state
-— verified by tests/test_resume.py.
+— verified by tests/test_parity.py::test_resume_exact.
 
-On a real cluster, ``IcebergStore`` swaps in ``writeTo(...).append()``
-snapshot commits (activated when iceberg-spark-runtime is on the
-classpath); the engine only talks to the 4-method interface below.
+An Iceberg-backed store would implement the same methods the driver
+calls (write_round, read, read_union, prune_table, latest_round,
+manifest, amend_manifest) with one Iceberg snapshot commit per round.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ParquetSnapshotStore:
@@ -167,13 +166,12 @@ class ParquetSnapshotStore:
         """Delete *table*'s data files for committed rounds < keep_from
         and record the pruning in those rounds' manifests (the name
         leaves ``tables`` so read_union skips it; ``pruned`` keeps the
-        row count for audit).  For per-round FULL snapshots — the
-        cuckoo seen-filter sidecar, rewritten whole every round —
-        only the latest snapshot is ever read, so a compaction round
-        prunes the older ones and the state dir holds
-        O(compact_every) filter snapshots on arbitrarily long crawls
+        row count for audit).  For per-round FULL snapshots
+        (``driver.SNAPSHOT_TABLES``), only the latest snapshot is ever
+        read, so a compaction round prunes the older ones and the state
+        dir holds O(compact_every) of them on arbitrarily long crawls
         (VERDICT r03 'Next round' #7).  Never use on append-only DELTA
-        tables (seen/host_edges/postings): their old rounds stay
+        tables (``driver.DELTA_TABLES``): their old rounds stay
         readable history until a ``<table>_full`` supersedes them.
 
         Returns the pruned round numbers.  Crash-safe: a kill between
@@ -236,30 +234,3 @@ def _parquet_rows(path: str) -> int:
     ds = pq.ParquetDataset(path)
     return sum(f.metadata.num_rows for f in (pq.ParquetFile(p) for p in ds.files))
 
-
-class IcebergStore:
-    """Thin Iceberg twin of ParquetSnapshotStore for real clusters.
-
-    Requires iceberg-spark-runtime on the classpath (not present in
-    this sandbox — SURVEY.md §7.1); every round commit becomes an
-    Iceberg snapshot on <catalog>.<db>.<table>, with the round number
-    as a snapshot tag, giving the same resume/time-travel semantics.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str):
-        self.spark = spark
-        self.namespace = namespace
-        try:
-            spark._jvm.org.apache.iceberg.Table  # noqa: B018 — classpath probe
-        except Exception as e:  # pragma: no cover - sandbox has no jar
-            raise RuntimeError(
-                "iceberg-spark-runtime not on classpath; use ParquetSnapshotStore"
-            ) from e
-
-    def write_round(self, rnd: int, tables: dict[str, DataFrame]) -> dict[str, int]:  # pragma: no cover
-        counts = {}
-        for name, df in tables.items():
-            full = f"{self.namespace}.{name}"
-            df.withColumn("round", F.lit(rnd)).writeTo(full).append()
-            counts[name] = -1
-        return counts

@@ -250,3 +250,41 @@ def test_refresh_victims_age_policy(spark, fixture_paths, tmp_path):
         x["url_hash"] for x in store.read_union(spark, nxt, "seen").collect()
     }
     assert got_seen == res.seen_hashes
+
+
+def test_recrawl_keeps_per_host_quota(spark, fixture_paths, tmp_path):
+    """A maintenance commit carries every snapshot table forward, so the
+    cumulative per-host quota (host_used) survives it: the two rounds
+    after a recrawl schedule exactly what the oracle schedules through
+    the same crawl→recrawl→crawl lifecycle, instead of every host
+    starting over with a fresh quota."""
+    from storm_focused_crawler_spark.oracle import seqcrawler as sq
+
+    wd = str(tmp_path / "recrawl_quota")
+    shutil.rmtree(wd, ignore_errors=True)
+    quota, capacity = 2, 32
+    cfg = _cfg(capacity=capacity, max_pages_per_host=quota)
+    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
+    victims = _link_discovered_urls(spark, store, fixture_paths)
+    vdf = spark.createDataFrame([(u,) for u in victims], "url string")
+    mnt = drv.recrawl(spark, store, cfg, vdf)
+    before, after = store.manifest(mnt - 1)["tables"], store.manifest(mnt)["tables"]
+    assert "host_used" in before
+    assert {t for t in drv.SNAPSHOT_TABLES if t in before} <= set(after)
+    store = drv.run_crawl(spark, fixture_paths, replace(cfg, rounds=mnt + 3), wd)
+
+    pages, seeds, robots, budgets = sq.load_fixture_inputs(fixture_paths)
+    ocfg = sq.CrawlConfig(
+        rounds=ROUNDS, capacity=capacity,
+        keywords=tuple(gen_pages.topic_keywords()), max_pages_per_host=quota,
+    )
+    res = sq.crawl(pages, seeds, robots, budgets, ocfg)
+    sq.recrawl(res, victims, mnt_round=mnt)
+    sq.crawl_rounds(res, sq.latest_captures(pages), seeds, robots, budgets, ocfg,
+                    mnt + 1, mnt + 3)
+    for rnd in (mnt + 1, mnt + 2):
+        got = sorted(
+            (x["round"], x["seq"], x["url"])
+            for x in store.read(spark, rnd, "ordering").collect()
+        )
+        assert got == sorted(t for t in res.ordering if t[0] == rnd), rnd
